@@ -102,6 +102,11 @@ def _git_head() -> tuple[str, bool]:
         return ("unknown", True)
 
 
+def _host_nproc() -> int:
+    """CPUs this process may run on (what ``nproc`` prints)."""
+    return len(os.sched_getaffinity(0))
+
+
 def _sha_label() -> str:
     sha, dirty = _git_head()
     return sha + ("+dirty" if dirty else "")
@@ -739,10 +744,13 @@ class _PairState:
         the raw canary samples, never trusted from the file. Legs whose
         recorded sha no longer matches the measured code (jobs/ + the
         package; ``_code_current``) — or that predate sha recording —
-        are REJECTED and counted (ADVICE r5)."""
+        are REJECTED and counted, as are legs measured on a host of
+        another width (``nproc`` missing or different): their walls do
+        not describe this host."""
         seen: set[tuple] = set()
         n = 0
         sha_ok: dict[str, bool] = {}
+        nproc = _host_nproc()
         for path in paths:
             try:
                 with open(path) as f:
@@ -768,6 +776,9 @@ class _PairState:
                 if key in seen:
                     continue
                 seen.add(key)
+                if rec.get("nproc") != nproc:
+                    self.rejected_stale += 1
+                    continue
                 rsha = str(rec.get("sha"))
                 if rsha not in sha_ok:
                     sha_ok[rsha] = _code_current(rsha, _SCALE_CODE_PATHS)

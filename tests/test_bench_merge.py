@@ -14,11 +14,12 @@ import bench
 
 
 def _scale_rec(t, cores, seconds, steal_quiet, n_docs=512_000_000,
-               sha="abc1234"):
+               sha="abc1234", nproc=None):
     sample = 0.2 if steal_quiet else 0.9
     return {
         "t": t,
         "sha": sha,
+        "nproc": bench._host_nproc() if nproc is None else nproc,
         "cores": cores,
         "n_docs": n_docs,
         "seconds": seconds,
@@ -171,3 +172,23 @@ def test_stale_sha_records_rejected(tmp_path, monkeypatch):
     n, n_stale = bench._merge_headline_state(all_times, all_probes, sources)
     assert n == 1 and n_stale == 1
     assert min(all_times["remove_overlaps"]) == 4.1
+
+
+def test_other_host_scale_records_rejected(tmp_path, monkeypatch):
+    """Legs measured on a host of another width (or before hunters
+    recorded nproc) never seed this host's pair — rejected and counted."""
+    _accept_abc(monkeypatch)
+    monkeypatch.setattr(bench, "_host_nproc", lambda: 4)
+    p = tmp_path / "s.jsonl"
+    recs = [
+        _scale_rec(1.0, 2, 100.0, True, nproc=4),
+        _scale_rec(2.0, 8, 30.0, True, nproc=32),  # wider host
+        _scale_rec(3.0, 8, 31.0, True, nproc=4),
+        _scale_rec(4.0, 8, 20.0, True),
+    ]
+    recs[3].pop("nproc")  # legacy record predating nproc stamping
+    p.write_text("\n".join(json.dumps(r) for r in recs) + "\n")
+    ps = bench._PairState(2, 8, 512_000_000)
+    assert ps.seed_from_state([str(p)]) == 2
+    assert ps.rejected_stale == 2
+    assert [r["seconds"] for r in ps.runs[8]] == [31.0]

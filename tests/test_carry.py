@@ -125,7 +125,7 @@ def test_asof_many_groups_no_carry_broadcast(spark):
         "CAST(id AS DOUBLE) AS v")
     q = spark.range(1000).selectExpr(
         "CAST(id % 400 AS STRING) AS g", "CAST(id * 2 AS INT) AS t")
-    out = asof_join(q, obs, "t", ["v"], ["g"], cache=False)
+    out = asof_join(q, obs, "t", ["v"], ["g"])
     assert "BroadcastExchange" not in _plan(out)
     # spot-check values still correct
     row = out.filter("g = '7' AND t = 14").first()

@@ -513,3 +513,20 @@ def test_vocab_coverage_preaggregates_before_rank(spark):
     assert "WindowGroupLimit" in plan
     # totals attach by broadcast (1-row side)
     assert "BroadcastExchange" in plan
+
+
+def test_ivf_cell_scores_evaluated_once(spark):
+    """_with_ivf_cell relies on CollapseProject keeping the twice-
+    referenced score array in its own projection: each centroid score
+    (one lambda aggregate) appears once in the plan, not once per
+    reference, and the cell matches the greatest+CASE form."""
+    from timeperiods_spark.operators.similarity import _with_ivf_cell, ivf_cell
+
+    n_centroids = 5
+    df = spark.range(8).selectExpr(
+        "array(CAST(id AS DOUBLE), 1.0D, CAST(id % 3 AS DOUBLE)) AS v"
+    )
+    out = _with_ivf_cell(df, "v", "cell", 3, n_centroids)
+    assert _plan(out).count("aggregate(") == n_centroids, _plan(out)[:1500]
+    ref = df.select("v", ivf_cell(F.col("v"), 3, n_centroids).alias("cell"))
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, ref.collect()))

@@ -4,6 +4,7 @@ watermarked event-time rollup."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -522,6 +523,117 @@ def test_concurrent_compactors_exactly_one_wins(spark, tmp_path):
     )
     # 3 epochs x 4 distinct rows, no duplication from a double-publish
     assert len(rows) == 12 and len(set(rows)) == 4
+
+
+def _epoch_index(spark, root):
+    """Three unregistered epoch dirs under ``root``."""
+    small = spark.range(4).selectExpr("id", "id AS band", "array(id) AS bsig")
+    for e in range(3):
+        small.write.parquet(os.path.join(root, f"__epoch={e}"))
+
+
+def test_compact_writes_marker_before_base_dir(spark, tmp_path, monkeypatch):
+    """A vacuum that runs the moment compact_root's base dir appears
+    must already see its pending marker and spare the dir."""
+    from timeperiods_spark.streaming import dedup_index as dix
+
+    root = str(tmp_path / "bands")
+    _epoch_index(spark, root)
+    for e in range(3):
+        dix.register_epoch(root, e)
+    real_makedirs = os.makedirs
+    dropped: list = []
+
+    def makedirs(path, *a, **kw):
+        real_makedirs(path, *a, **kw)
+        if os.path.basename(path).startswith(dix.BASE_PREFIX):
+            dropped.extend(dix.vacuum_root(root))
+
+    monkeypatch.setattr(os, "makedirs", makedirs)
+    name = dix.compact_root(spark, root, through_epoch=2, remove_old=False)
+    monkeypatch.undo()
+    assert name == "__base0"
+    assert name not in dropped, dropped
+
+
+def test_scanners_list_dirs_before_markers(spark, tmp_path, monkeypatch):
+    """A compactor reserving a base (marker, then dir) right after a
+    scanner read the markers must stay invisible to live_dirs and safe
+    from vacuum_root."""
+    from timeperiods_spark.streaming import dedup_index as dix
+
+    root = str(tmp_path / "bands")
+    _epoch_index(spark, root)
+    real = dix._pending_bases
+
+    def reserve_after_scan(name):
+        fired = []
+
+        def pending_bases(r):
+            out = real(r)
+            if not fired:
+                fired.append(name)
+                open(dix._pending_marker(root, name), "w").close()
+                os.makedirs(os.path.join(root, name))
+            return out
+
+        monkeypatch.setattr(dix, "_pending_bases", pending_bases)
+
+    # legacy layout (no manifest): discovery must not expose the base
+    reserve_after_scan("__base8")
+    assert "__base8" not in dix.live_dirs(root)
+    monkeypatch.setattr(dix, "_pending_bases", real)
+    for e in range(3):
+        dix.register_epoch(root, e)
+    # manifest layout: vacuum must not delete the in-flight base
+    reserve_after_scan("__base9")
+    assert "__base9" not in dix.vacuum_root(root)
+    assert os.path.isdir(os.path.join(root, "__base9"))
+
+
+def test_vacuum_rechecks_marker_and_tolerates_vanished_dirs(
+    spark, tmp_path, monkeypatch
+):
+    """Between vacuum's snapshot and its rmtree, a dead dir may vanish
+    (a lost-race compactor deleting its own base) or gain a pending
+    marker: the vacuum neither fails nor deletes the marked dir."""
+    from timeperiods_spark.streaming import dedup_index as dix
+
+    root = str(tmp_path / "bands")
+    _epoch_index(spark, root)
+    for e in range(3):
+        dix.register_epoch(root, e)
+    assert dix.compact_root(
+        spark, root, through_epoch=2, remove_old=False
+    ) == "__base0"
+    os.makedirs(os.path.join(root, "__base7"))  # dead, unmarked
+    real = dix._epoch_id
+
+    def epoch_id(name):
+        if name == "__epoch=1":
+            shutil.rmtree(os.path.join(root, name))
+        if name == "__base7":
+            open(dix._pending_marker(root, name), "w").close()
+        return real(name)
+
+    monkeypatch.setattr(dix, "_epoch_id", epoch_id)
+    dropped = dix.vacuum_root(root)
+    assert sorted(dropped) == ["__epoch=0", "__epoch=1", "__epoch=2"]
+    assert os.path.isdir(os.path.join(root, "__base7"))
+
+
+def test_next_base_name_skips_marked_names(spark, tmp_path):
+    """A pending marker whose dir is gone (manual cleanup of a crashed
+    compactor's dir) still retires its generation name."""
+    from timeperiods_spark.streaming import dedup_index as dix
+
+    root = str(tmp_path / "bands")
+    _epoch_index(spark, root)
+    for e in range(3):
+        dix.register_epoch(root, e)
+    open(dix._pending_marker(root, "__base0"), "w").close()
+    assert dix.compact_root(spark, root, through_epoch=2) == "__base1"
+    assert dix.live_dirs(root) == ["__base1"]
 
 
 def test_distinct_rollup_stream_matches_batch_sketch(spark, tmp_path):

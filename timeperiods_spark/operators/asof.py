@@ -36,6 +36,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..errors import RoleValidationError
+from ..plans.cachectl import managed_persist
 from ..plans.carry import attach_carry, plan_buckets
 
 
@@ -48,7 +49,6 @@ def asof_join(
     *,
     tolerance: Optional[int] = None,
     n_buckets: Optional[int] = None,
-    cache: bool = True,
     direction: str = "backward",
 ) -> DataFrame:
     """For each query row, attach the matched observation value(s) in
@@ -71,11 +71,6 @@ def asof_join(
     Output: all query columns + ``value_vars…`` + ``asof_<on>`` (the
     matched observation time, NULL when unmatched). ``on`` is returned
     as a long (grid units) in all directions.
-
-    ``cache=True`` persists the unioned stream (it feeds the bucket
-    bounds action plus two plan subtrees); long-lived sessions issuing
-    many as-of joins should pass ``cache=False`` to avoid accumulating
-    cached blocks, at the cost of recomputing the union per subtree.
     """
     group_vars = list(group_vars or [])
     value_vars = list(value_vars)
@@ -90,7 +85,7 @@ def asof_join(
         neg_o = observations.withColumn(on, -F.col(on).cast("long"))
         out = asof_join(
             neg_q, neg_o, on, value_vars, group_vars,
-            tolerance=tolerance, n_buckets=n_buckets, cache=cache,
+            tolerance=tolerance, n_buckets=n_buckets,
         )
         return out.withColumn(on, -F.col(on)).withColumn(
             f"asof_{on}", -F.col(f"asof_{on}")
@@ -100,7 +95,7 @@ def asof_join(
         # pass as ordinary query payload, then the closer match wins
         bwd = asof_join(
             queries, observations, on, value_vars, group_vars,
-            tolerance=tolerance, n_buckets=n_buckets, cache=cache,
+            tolerance=tolerance, n_buckets=n_buckets,
         )
         renames = {v: f"__bwd_{v}" for v in value_vars}
         renames[f"asof_{on}"] = "__bwd_t"
@@ -108,7 +103,7 @@ def asof_join(
             bwd = bwd.withColumnRenamed(old, new)
         fwd = asof_join(
             bwd, observations, on, value_vars, group_vars,
-            tolerance=tolerance, n_buckets=n_buckets, cache=cache,
+            tolerance=tolerance, n_buckets=n_buckets,
             direction="forward",
         )
         t = F.col(on).cast("long")
@@ -164,18 +159,9 @@ def asof_join(
         *[F.col(c).alias(f"__q_{c}") for c in q_payload],
     )
     stream = obs.unionByName(qs)
-    if cache:
-        from ..plans.cachectl import managed_persist_percall
-
-        # the stream feeds the bucket-bounds action plus two plan
-        # subtrees (per-bucket carry, bucket last-observations);
-        # managed: a repeat call releases the previous call's frame.
-        # The tag carries the direction so 'nearest' (backward pass
-        # consumed lazily by the forward pass) doesn't evict its own
-        # still-needed backward stream mid-composition.
-        stream = managed_persist_percall(
-            stream, f"asof_join.stream.{direction}", keep=2
-        )
+    # the stream feeds the bucket-bounds action plus two plan subtrees
+    # (per-bucket carry, bucket last-observations)
+    stream = managed_persist(stream, "asof_join.stream")
 
     plan = plan_buckets(stream, group_vars, "__t", n_buckets=n_buckets)
     if plan.empty:

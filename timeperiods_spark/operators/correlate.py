@@ -26,6 +26,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import RoleValidationError
+from ..plans.cachectl import managed_persist
 
 
 def cross_correlation(
@@ -67,11 +68,8 @@ def cross_correlation(
     # both join sides consume the narrow series frame: persist so the
     # upstream pipeline (typically a tier rollup) executes once per
     # call instead of twice
-    from ..plans.cachectl import managed_persist_percall
-
-    base = managed_persist_percall(
-        base, "cross_correlation.base", keep=2,
-        storage_level=StorageLevel.DISK_ONLY,
+    base = managed_persist(
+        base, "cross_correlation.base", StorageLevel.DISK_ONLY
     )
     a = (
         base.join(F.broadcast(pair_df), F.col("__s") == F.col("series_a"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import texthash as TH
 from ..functions.grid import spread_input
+from ..plans.cachectl import managed_persist
 
 #: hot-bucket visibility thresholds (cap off): warn when the largest
 #: (band,bsig) bucket exceeds BOTH an absolute floor and a multiple of
@@ -115,7 +116,6 @@ def minhash_candidate_pairs(
     n_hashes: int = 12,
     bands: int = 4,
     verify_threshold: Optional[float] = None,
-    cache_shingles: bool = True,
     max_bucket_size: Optional[int] = None,
     hash_fn: str = "poly",
     hot_bucket_warn: bool = True,
@@ -144,9 +144,9 @@ def minhash_candidate_pairs(
     "matched only on boilerplate". Default None = exact (no cap).
 
     The shingle frame is consumed three times when verifying (banding
-    plus two pair re-attach joins); ``cache_shingles`` persists it so
-    shingling runs once — at true corpus scale, write the shingle
-    frame to a table instead and pass texts pre-shingled.
+    plus two pair re-attach joins), so it is persisted and shingling
+    runs once — at true corpus scale, write the shingle frame to a
+    table instead and pass texts pre-shingled.
 
     ``hot_bucket_warn=True`` with no cap runs an eager skew probe; the
     banded frame is persisted first so the probe fills the cache the
@@ -159,12 +159,8 @@ def minhash_candidate_pairs(
     sh = shingle_frame(df, id_col, text_col, k, hash_fn).filter(
         F.size("hashes") > 0
     )
-    if cache_shingles and verify_threshold is not None:
-        from ..plans.cachectl import managed_persist_percall
-
-        sh = managed_persist_percall(
-            sh, "minhash_candidate_pairs.shingles", keep=2
-        )
+    if verify_threshold is not None:
+        sh = managed_persist(sh, "minhash_candidate_pairs.shingles")
     # The band self-join and the pair dedup carry ONLY (id, band, bsig):
     # shipping the shingle-hash arrays (~doc length) through the band
     # exchange AND the dropDuplicates, multiplied by `bands`, is the
@@ -198,11 +194,8 @@ def minhash_candidate_pairs(
     # set). Persist it ONCE, before any cap/probe subtree forks off, so
     # every consumer reads the cache (persist alone is lazy, so the
     # no-warn path stays fully lazy).
-    from ..plans.cachectl import managed_persist_percall
-
-    banded = managed_persist_percall(
-        banded, "minhash_candidate_pairs.banded", keep=2,
-        storage_level=StorageLevel.DISK_ONLY,
+    banded = managed_persist(
+        banded, "minhash_candidate_pairs.banded", StorageLevel.DISK_ONLY
     )
 
     if max_bucket_size is not None:
@@ -348,7 +341,6 @@ def minhash_dedup_incremental(
     bands: int = 4,
     verify_threshold: float = 0.7,
     broadcast_batch: bool = False,
-    cache: bool = True,
     max_bucket_size: Optional[int] = None,
     hash_fn: str = "poly",
 ) -> dict:
@@ -389,16 +381,10 @@ def minhash_dedup_incremental(
     batch_sh = shingle_frame(new_batch, id_col, text_col, k, hash_fn).filter(
         F.size("hashes") > 0
     )
-    if cache:
-        # the batch shingle frame feeds banding, the pair verify, and
-        # the returned new_shingles; managed, so repeated batches hold
-        # at most one cached frame (stream_dedup_ingest additionally
-        # unpersists eagerly once the epoch is materialized)
-        from ..plans.cachectl import managed_persist_percall
-
-        batch_sh = managed_persist_percall(
-            batch_sh, "minhash_dedup_incremental.shingles", keep=2
-        )
+    # the batch shingle frame feeds banding, the pair verify, and the
+    # returned new_shingles (stream_dedup_ingest unpersists it eagerly
+    # once the epoch is materialized)
+    batch_sh = managed_persist(batch_sh, "minhash_dedup_incremental.shingles")
     batch_bands = minhash_band_frame(batch_sh, n_hashes=n_hashes, bands=bands)
     # NOTE: five consumers re-run the banding of the batch (hot-bucket
     # union, index probe, both internal join sides, new_bands); a
@@ -724,7 +710,6 @@ def embedding_dedup_incremental(
     threshold: float = 0.9,
     probes: int = 1,
     broadcast_batch: bool = False,
-    cache: bool = True,
 ) -> dict:
     """Deduplicate a NEW batch of embeddings against a persisted SRP
     index — the embedding-mode mirror of
@@ -757,15 +742,8 @@ def embedding_dedup_incremental(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    if cache:
-        # feeds bucketing, the pair verify, and the returned
-        # new_vectors; managed so repeated calls in a long session
-        # don't accumulate persisted intermediates
-        from ..plans.cachectl import managed_persist_percall
-
-        batch = managed_persist_percall(
-            batch, "embedding_dedup_incremental.batch", keep=2
-        )
+    # feeds bucketing, the pair verify, and the returned new_vectors
+    batch = managed_persist(batch, "embedding_dedup_incremental.batch")
     batch_buckets = batch.select(
         "id", srp_bucket(F.col("v"), dim, n_planes).alias("bucket")
     )
@@ -918,7 +896,6 @@ def simhash_dedup_incremental(
     bands: int = 8,
     max_hamming: int = 3,
     broadcast_batch: bool = False,
-    cache: bool = True,
     hash_fn: str = "poly",
 ) -> dict:
     """Deduplicate a NEW batch against a persisted SimHash index — the
@@ -943,14 +920,11 @@ def simhash_dedup_incremental(
     batch_sf = simhash_frame(
         new_batch, id_col, text_col, k=k, bits=bits, hash_fn=hash_fn
     )
-    if cache:
-        # feeds chunking, the hamming verify, and the returned
-        # new_fingerprints; managed so repeated batches stay bounded
-        from ..plans.cachectl import managed_persist_percall
-
-        batch_sf = managed_persist_percall(
-            batch_sf, "simhash_dedup_incremental.fingerprints", keep=2
-        )
+    # feeds chunking, the hamming verify, and the returned
+    # new_fingerprints
+    batch_sf = managed_persist(
+        batch_sf, "simhash_dedup_incremental.fingerprints"
+    )
     batch_chunks = _simhash_chunk_frame(batch_sf, bands, w)
     if index_chunks is None or index_fingerprints is None:
         if index_chunks is not None or index_fingerprints is not None:

@@ -39,6 +39,7 @@ from ..errors import (
     OverlapError,
     RoleValidationError,
 )
+from ..plans.cachectl import managed_persist
 from ..plans.strategy import build_overlap_pairs
 
 #: Output column names reserved by the operator
@@ -415,8 +416,6 @@ def interval_weighted_avg(
     # production callers opting into physical tuning; size caps keep a
     # 100 TB x from being spooled to cache to save a 10k-row sample.
     if caller_join_stats:
-        from ..plans.cachectl import managed_persist_percall
-
         _nx = join_stats[0] if len(join_stats) > 0 else None
         _ny = join_stats[1] if len(join_stats) > 1 else None
         if (
@@ -425,14 +424,12 @@ def interval_weighted_avg(
             and bin_width is None
             and join_strategy in ("auto", "bin")
         ):
-            xw = managed_persist_percall(
-                xw, "interval_weighted_avg.x", keep=2,
-                storage_level=StorageLevel.DISK_ONLY,
+            xw = managed_persist(
+                xw, "interval_weighted_avg.x", StorageLevel.DISK_ONLY
             )
         if _ny is not None and int(_ny) <= _Y_PERSIST_MAX_ROWS:
-            yd = managed_persist_percall(
-                yd, "interval_weighted_avg.y", keep=2,
-                storage_level=StorageLevel.DISK_ONLY,
+            yd = managed_persist(
+                yd, "interval_weighted_avg.y", StorageLevel.DISK_ONLY
             )
     _vlog(
         f"plan: join_strategy={join_strategy!r} n_groups={n_g} "

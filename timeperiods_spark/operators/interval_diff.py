@@ -22,6 +22,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..errors import IntervalValidationError, RoleValidationError
+from ..plans.cachectl import managed_persist
 from ..plans.carry import attach_carry, plan_buckets
 from .interval_avg import _grid, _is_intervalish, _sweep_checked_end, _ungrid
 
@@ -60,7 +61,6 @@ def interval_difference(
     group_vars: Optional[Sequence[str]] = None,
     *,
     group_count_hint: Optional[int] = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Maximal disjoint intervals covered by ``x`` and not by ``y``
     within each group: columns ``group_vars…, <start>, <end>``. Both
@@ -89,15 +89,9 @@ def interval_difference(
         .groupBy(*gcols, "__pos")
         .agg(F.sum("__dx").alias("__dx"), F.sum("__dy").alias("__dy"))
     )
-    if cache:
-        # boundary-sized post-aggregate frame feeding two planner stats
-        # actions plus the main plan — scan both sources once;
-        # managed, so repeat calls release the previous frame
-        from ..plans.cachectl import managed_persist_percall
-
-        deltas = managed_persist_percall(
-            deltas, "interval_difference.deltas", keep=2
-        )
+    # boundary-sized post-aggregate frame feeding two planner stats
+    # actions plus the main plan — scan both sources once
+    deltas = managed_persist(deltas, "interval_difference.deltas")
 
     plan = plan_buckets(deltas, gcols, "__pos", group_count_hint=group_count_hint)
     excl = lambda wg: wg.rowsBetween(Window.unboundedPreceding, -1)  # noqa: E731

@@ -23,6 +23,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..errors import IntervalValidationError, RoleValidationError
+from ..plans.cachectl import managed_persist
 from ..plans.carry import attach_carry, plan_buckets
 from .interval_avg import _grid, _is_intervalish, _sweep_checked_end, _ungrid
 
@@ -33,7 +34,6 @@ def merge_intervals(
     group_vars: Optional[Sequence[str]] = None,
     *,
     group_count_hint: Optional[int] = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Maximal disjoint union intervals per group: columns
     ``group_vars…, <start>, <end>, n_source_intervals`` (how many input
@@ -78,18 +78,10 @@ def merge_intervals(
             F.sum(F.when(F.col("__d") > 0, 1).otherwise(0)).alias("__n"),
         )
     )
-    if cache:
-        # the (boundary-sized, post-aggregate) delta frame feeds both
-        # bucket-planner stats actions plus the main plan — persist so
-        # the raw input is scanned once; managed, so repeat calls
-        # release the previous frame (cache=False opts out)
-        from ..plans.cachectl import managed_persist_percall
-
-        # per-call tag (r5 item 6): pipelines hold several lazy
-        # merge_intervals results at once; a shared tag evict-thrashes
-        deltas = managed_persist_percall(
-            deltas, "merge_intervals.deltas", keep=2
-        )
+    # the (boundary-sized, post-aggregate) delta frame feeds both
+    # bucket-planner stats actions plus the main plan — persist so the
+    # raw input is scanned once
+    deltas = managed_persist(deltas, "merge_intervals.deltas")
 
     plan = plan_buckets(
         deltas, gcols, "__pos", group_count_hint=group_count_hint

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from ..errors import IntervalValidationError, OverlapError, RoleValidationError
+from ..plans.cachectl import managed_persist
 from ..plans.strategy import build_overlap_pairs
 from .interval_avg import _grid, _is_intervalish, _ungrid
 
@@ -114,7 +115,6 @@ def remove_overlaps(
     join_strategy: str = "bin",
     bin_width: Optional[int] = None,
     keep_values: bool = True,
-    cache: bool = True,
 ) -> DataFrame:
     """Decompose possibly-overlapping intervals into atomic pieces.
 
@@ -172,13 +172,8 @@ def remove_overlaps(
     # base feeds four subtrees (sweep bounds, per-bucket leads, bucket
     # firsts, and the join-back): persist so the upstream input is
     # computed once — at corpus scale it's (groups, 2 longs, payload)
-    # per interval, spilling to disk if needed. Managed: a repeat call
-    # releases the previous call's frame, so long-lived sessions hold
-    # at most one cached melt (cache=False opts out entirely).
-    if cache:
-        from ..plans.cachectl import managed_persist_percall
-
-        base = managed_persist_percall(base, "remove_overlaps.base", keep=2)
+    # per interval, spilling to disk if needed
+    base = managed_persist(base, "remove_overlaps.base")
 
     # O21 — melt endpoints into a long event stream
     melted = base.select(*gcols, F.col("__xs").alias("__val"), F.lit(False).alias("__is_end")).unionByName(
@@ -211,14 +206,10 @@ def remove_overlaps(
     # sweep executed twice per call (measured ~2x the sweep cost in the
     # r6 bench). The frame is small (<= 2 rows per input interval,
     # group keys + 2 longs), so the per-call persist is cheap at any
-    # scale; managed, same lifecycle as the base melt above.
-    if cache:
-        from ..plans.cachectl import managed_persist_percall
-
-        atomic = managed_persist_percall(
-            atomic, "remove_overlaps.atomic", keep=2,
-            storage_level=StorageLevel.DISK_ONLY,
-        )
+    # scale.
+    atomic = managed_persist(
+        atomic, "remove_overlaps.atomic", StorageLevel.DISK_ONLY
+    )
 
     # O24 — tag each atomic piece with every original interval covering
     # it. Reuse the range-join strategies: originals are the x side,

@@ -22,6 +22,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..errors import RoleValidationError
+from ..plans.cachectl import managed_persist
 
 
 def token_histogram(
@@ -191,11 +192,8 @@ def tfidf_topk(
     # re-run the corpus explode + hash aggregate; the aggregated
     # (doc, token, count) frame is the small decision table — persist
     # it once per call
-    from ..plans.cachectl import managed_persist_percall
-
-    per_doc = managed_persist_percall(
-        per_doc, "tfidf_topk.per_doc", keep=2,
-        storage_level=StorageLevel.DISK_ONLY,
+    per_doc = managed_persist(
+        per_doc, "tfidf_topk.per_doc", StorageLevel.DISK_ONLY
     )
     doc_len = per_doc.groupBy("__id").agg(F.sum("__c").alias("__len"))
     dfreq = per_doc.groupBy("__t").agg(
@@ -391,7 +389,6 @@ def ngram_repetition(
     exploded frame (managed-persisted once); coverage assembly rides
     the carried interval-union sweep. Everything is JVM expressions —
     no Python in the row path."""
-    from ..plans.cachectl import managed_persist_percall
     from .interval_union import merge_intervals
 
     ns = [int(n) for n in ns]
@@ -434,10 +431,7 @@ def ngram_repetition(
             ).alias("__gram"),
         )
     )
-    # per-call tag: a sweep over several n-gram settings (or the test
-    # suite) legitimately holds multiple lazy results at once — a
-    # shared tag would evict-thrash and silently recompute (r5 item 6)
-    pos = managed_persist_percall(pos, "ngram_repetition.pos", keep=2)
+    pos = managed_persist(pos, "ngram_repetition.pos")
 
     cnt = pos.groupBy("__id", "__n", "__gram").agg(
         F.count(F.lit(1)).alias("__c")
@@ -514,11 +508,9 @@ def vocab_coverage(
     sizes = sorted({int(v) for v in vocab_sizes})
     if not sizes or sizes[0] <= 0:
         raise RoleValidationError("vocab_sizes must be positive")
-    from ..plans.cachectl import managed_persist_percall
-
     # counts feeds two consumers (rank + totals): persist the AGGREGATED
     # frame so the corpus-sized explode + hash agg runs once
-    counts = managed_persist_percall(
+    counts = managed_persist(
         token_histogram(df, tokens_col, weight_col=weight_col),
         "vocab_coverage.counts",
     )

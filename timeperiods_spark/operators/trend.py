@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..errors import RoleValidationError
+from ..plans.cachectl import managed_persist
 from ..plans.carry import attach_carry, plan_buckets
 
 
@@ -378,13 +379,8 @@ def holt(
     if not whole_group:
         # the bucketed path reads `local` twice (bucket stats + the
         # join-back) — without a persist the whole Arrow scan runs
-        # twice (measured ~2x wall at 4M rows). Per-CALL tags: a
-        # pipeline that builds holt twice before collecting either
-        # would evict a shared tag and silently recompute the first
-        # call's Arrow stage (VERDICT r5 finding 3)
-        from ..plans.cachectl import managed_persist_percall
-
-        local = managed_persist_percall(local, "holt.local")
+        # twice (measured ~2x wall at 4M rows)
+        local = managed_persist(local, "holt.local")
 
     def _emit(frame, level, trend):
         cols = [
@@ -594,11 +590,8 @@ def ewma(
 
     local = src.groupBy(*gcols, "__bk").applyInPandas(_batch, out_schema)
     if not whole_group:
-        # bucketed path reads `local` twice (bucket stats + join-back);
-        # per-call tags so multi-call pipelines keep each call cached
-        from ..plans.cachectl import managed_persist_percall
-
-        local = managed_persist_percall(local, "ewma.local")
+        # bucketed path reads `local` twice (bucket stats + join-back)
+        local = managed_persist(local, "ewma.local")
 
     if whole_group:
         # init handled inside the batch; no cross-bucket composition

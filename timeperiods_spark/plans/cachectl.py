@@ -5,48 +5,52 @@ than once downstream (the as-of union frame, the overlap melt, the
 interval-algebra delta frame, the dedup shingle/batch frames). A bare
 ``.persist()`` there leaks in long-lived sessions: nothing ever
 unpersists, and repeated operator calls grow the storage pool without
-bound (VERDICT r3 item 6).
+bound.
 
-This module is the single place that owns those intermediates. Each
-persist site registers under a stable tag; re-registering a tag
-unpersists the PREVIOUS frame first, so repeated calls of the same
-operator hold at most one cached intermediate each — the storage pool
-is bounded by the number of distinct operator call-sites, not the
-number of calls. ``release()`` drops everything (or one tag) eagerly,
-e.g. at the end of a pipeline stage.
+One rule owns those intermediates: each persist site holds at most
+``PLANS_PER_SITE`` distinct PLANS, keyed the way Spark's own cache
+keys them (``semanticHash()``, confirmed with ``sameSemantics()``).
+
+- A call whose plan matches a held one refreshes that entry instead of
+  adding one. Spark's CacheManager gives identical plans ONE shared
+  cache entry, so a registry keyed per call would release, on behalf
+  of an old call, the very entry a new identical call is reading — and
+  ``uncacheQuery`` also recompiles every cached plan built on top of
+  it. Keyed by plan, an eviction never drops an entry that a held
+  plan shares.
+- A new distinct plan evicts the site's oldest one. Two lets a
+  pipeline hold two lazy results of one operator at once (two holt
+  calls collected together; the backward and forward passes of a
+  ``nearest`` as-of join).
+
+``release()`` drops everything (or one site) eagerly, e.g. at the end
+of a pipeline stage.
 
 Contract notes:
 - Unpersisting a frame a still-lazy earlier RESULT depends on is
   correctness-safe (Spark recomputes); only the caching benefit for
-  that stale result is lost. Callers that materialize results promptly
-  (the normal shape) never notice.
+  that stale result is lost.
 - ``blocking=False``: unpersist is async cleanup, never a barrier.
 """
 
 from __future__ import annotations
 
 import threading
-import warnings
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-_REGISTRY: Dict[str, DataFrame] = {}
+#: distinct plans one persist site keeps cached; the oldest goes first
+PLANS_PER_SITE = 2
+
+#: site -> [(semanticHash, persisted frame)], oldest first
+_REGISTRY: Dict[str, List[Tuple[int, DataFrame]]] = {}
 # drivers legitimately submit operator calls from several threads
-# (concurrent job groups); without the lock two same-tag calls race on
-# pop/put and the loser's frame leaks unreferenced — the exact
+# (concurrent job groups); without the lock two same-site calls race on
+# the list and the loser's frame leaks unreferenced — the exact
 # unbounded growth this module exists to prevent
 _LOCK = threading.Lock()
-
-#: per-tag eviction counts — a tag evicted many times in one session
-#: means concurrent (or lazily-consumed) same-tag pipelines are
-#: thrashing the slot and silently recomputing the intermediate
-_EVICTIONS: Dict[str, int] = {}
-_WARNED: set = set()
-#: evictions of one tag before the once-per-tag thrash warning fires;
-#: the first few are the normal repeated-operator-call shape
-EVICTION_WARN_THRESHOLD = 3
 
 
 def _unpersist_quietly(df: DataFrame) -> None:
@@ -58,89 +62,40 @@ def _unpersist_quietly(df: DataFrame) -> None:
 
 def managed_persist(
     df: DataFrame,
-    tag: str,
+    site: str,
     storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> DataFrame:
-    """Persist ``df`` under ``tag``, unpersisting whatever frame the
-    tag previously held. Returns the persisted frame."""
+    """Persist ``df`` under ``site`` and return it. A plan the site
+    already holds is refreshed (Spark serves it from the shared entry);
+    a new plan evicts the site's oldest beyond ``PLANS_PER_SITE``."""
+    h = df.semanticHash()
     out = df.persist(storage_level)
     with _LOCK:
-        prev = _REGISTRY.get(tag)
-        _REGISTRY[tag] = out
-        warn = False
-        if prev is not None and prev is not out:
-            n = _EVICTIONS[tag] = _EVICTIONS.get(tag, 0) + 1
-            if n >= EVICTION_WARN_THRESHOLD and tag not in _WARNED:
-                _WARNED.add(tag)
-                warn = True
-    if prev is not None and prev is not out:
-        _unpersist_quietly(prev)
-        if warn:
-            warnings.warn(
-                f"cachectl: tag '{tag}' evicted {EVICTION_WARN_THRESHOLD}+ "
-                "times this session. Benign if each call's result was "
-                "materialized before the next call; but concurrent or "
-                "lazily-consumed same-tag calls are silently recomputing "
-                "this intermediate every time (correctness-safe, cache "
-                "benefit lost). Materialize results promptly or call "
-                "release() between pipeline stages. Warned once per tag.",
-                stacklevel=2,
-            )
+        held = [
+            (hh, f) for hh, f in _REGISTRY.get(site, [])
+            if not (hh == h and f.sameSemantics(out))
+        ]
+        held.append((h, out))
+        evicted = held[:-PLANS_PER_SITE]
+        _REGISTRY[site] = held[-PLANS_PER_SITE:]
+    for _, f in evicted:
+        _unpersist_quietly(f)
     return out
 
 
-#: per-family call counters and FIFO of live per-call tags
-_FAMILY_SEQ: Dict[str, int] = {}
-_FAMILY_TAGS: Dict[str, List[str]] = {}
-
-
-def managed_persist_percall(
-    df: DataFrame,
-    family: str,
-    keep: int = 4,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-) -> DataFrame:
-    """Per-CALL managed persist: every call registers a fresh tag
-    ``family#<n>`` and the oldest frames beyond ``keep`` are released
-    FIFO. Use for operators whose intermediate is read MORE THAN ONCE
-    per call and whose callers legitimately hold several lazy results
-    at once (the trend scans: a two-stage pipeline builds holt twice
-    before collecting either — a single shared tag would evict the
-    first call's Arrow stage and silently recompute it at collect time,
-    VERDICT r5 finding 3). The pool stays bounded at ``keep`` frames
-    per family instead of one."""
-    with _LOCK:
-        n = _FAMILY_SEQ[family] = _FAMILY_SEQ.get(family, 0) + 1
-    tag = f"{family}#{n}"
-    out = managed_persist(df, tag, storage_level)
-    with _LOCK:
-        q = _FAMILY_TAGS.setdefault(family, [])
-        q.append(tag)
-        evict = [q.pop(0) for _ in range(max(0, len(q) - int(keep)))]
-    for t in evict:
-        release(t)
-    return out
-
-
-def release(tag: Optional[str] = None) -> int:
-    """Unpersist managed intermediates — one tag, or all when ``tag``
+def release(site: Optional[str] = None) -> int:
+    """Unpersist managed intermediates — one site, or all when ``site``
     is None. Returns the number of frames released."""
     with _LOCK:
-        tags = [tag] if tag is not None else list(_REGISTRY)
-        dropped = [
-            _REGISTRY.pop(t) for t in tags if t in _REGISTRY
-        ]
-        # an explicit release is the caller doing lifecycle correctly —
-        # start the thrash accounting fresh for these tags
-        for t in tags:
-            _EVICTIONS.pop(t, None)
-            _WARNED.discard(t)
+        sites = [site] if site is not None else list(_REGISTRY)
+        dropped = [f for s in sites for _, f in _REGISTRY.pop(s, [])]
     for df in dropped:
         _unpersist_quietly(df)
     return len(dropped)
 
 
-def managed_tags() -> List[str]:
-    """Currently-held tags (for tests / introspection)."""
+def held_plans() -> Dict[str, int]:
+    """Distinct plans currently held per site (for tests /
+    introspection)."""
     with _LOCK:
-        return sorted(_REGISTRY)
+        return {s: len(v) for s, v in sorted(_REGISTRY.items())}

@@ -1,7 +1,9 @@
 """SparkSession construction tuned for this engine.
 
-Local-mode defaults match the sandbox (local[$SPARK_GRAFT_CPUS]); on a
-real cluster the same builder options apply, with
+Local-mode defaults are sized from the host: local[<usable CPUs>] and a
+driver heap of half the physical memory, overridable with
+$SPARK_GRAFT_CPUS and $SPARK_GRAFT_DRIVER_MEM. On a real cluster the
+same SparkSession options apply, with
 spark.sql.shuffle.partitions sized to ~2-3x total cores and AQE left on
 to coalesce and to split skewed partitions at runtime.
 """
@@ -11,6 +13,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def _default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half the host's MemTotal (at
+    least 1 GiB): in local mode the driver JVM is the whole engine, and
+    the rest is left to Python workers, the page cache and the OS."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, total // 2**20 // 2)}m"
 
 
 def get_spark(
@@ -39,7 +58,7 @@ def get_spark(
             pkg_root + (os.pathsep + existing if existing else "")
         )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _default_cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
@@ -61,7 +80,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in extra_conf.items():

@@ -102,11 +102,11 @@ def _pending_marker(root: str, base_name: str) -> str:
 
 def _pending_bases(root: str) -> set:
     """Base names reserved by an in-flight compact_root (ADVICE r6):
-    the name is chosen and the empty dir + this marker created under
-    the manifest lock, but the expensive merge write runs outside it —
-    without the marker a concurrent vacuum_root would see a non-live
-    base dir and rmtree the merge out from under the swap. A marker
-    left by a CRASHED compactor shields one dead dir until the next
+    the name is chosen and this marker + the empty dir created (in that
+    order) under the manifest lock, but the expensive merge write runs
+    outside it — without the marker a concurrent vacuum_root would see
+    a non-live base dir and rmtree the merge out from under the swap. A
+    marker left by a CRASHED compactor shields one dead dir until the next
     successful compact_root of the same root completes (its vacuum
     drops markers whose base became live; an orphaned never-swapped
     base stays until manual cleanup — the safe direction)."""
@@ -118,6 +118,17 @@ def _pending_bases(root: str) -> set:
         if f.startswith(PENDING_PREFIX)
         and os.path.isfile(os.path.join(root, f))
     }
+
+
+def _unreserved_dirs(root: str) -> List[str]:
+    """Data dirs on disk minus bases an in-flight compact_root reserved.
+    Dirs are listed BEFORE markers: a reservation writes its marker
+    before its dir, so every reserved dir this listing sees still has
+    its marker when the markers are read (a marker is removed only once
+    its base is live or abandoned)."""
+    present = _present_dirs(root)
+    pend = _pending_bases(root)
+    return [d for d in present if d not in pend]
 
 
 def _epoch_id(name: str) -> Optional[int]:
@@ -161,8 +172,7 @@ def live_dirs(root: str) -> List[str]:
     live, _ = read_manifest(root)
     if live is not None:
         return live
-    pend = _pending_bases(root)
-    return [d for d in _present_dirs(root) if d not in pend]
+    return _unreserved_dirs(root)
 
 
 def compacted_through(root: str) -> int:
@@ -183,8 +193,7 @@ def register_epoch(root: str, epoch_id: int) -> bool:
             # first manifest: adopt everything already on disk (legacy
             # dirs written before this module existed stay visible) —
             # except a base a concurrent compact_root is still writing
-            pend = _pending_bases(root)
-            live = [d for d in _present_dirs(root) if d not in pend]
+            live = _unreserved_dirs(root)
         name = f"{EPOCH_PREFIX}{int(epoch_id)}"
         if name not in live:
             live = live + [name]
@@ -204,12 +213,14 @@ def read_live(spark: SparkSession, root: str) -> Optional[DataFrame]:
 
 
 def _next_base_name(root: str) -> str:
+    """One generation above every base on disk — dirs AND pending
+    markers, so a marker whose dir is gone still retires its name."""
     gen = 1 + max(
         (
             int(m.group(1) or 0)
             for m in (
                 re.match(re.escape(BASE_PREFIX) + r"(\d*)$", d)
-                for d in _present_dirs(root)
+                for d in [*_present_dirs(root), *_pending_bases(root)]
             )
             if m
         ),
@@ -260,13 +271,13 @@ def compact_root(
             # nothing to merge: zero or one dir and it is already a base
             return None
         base_name = _next_base_name(root)
-        # reserve the name UNDER the lock (ADVICE r6): the empty dir
-        # makes a concurrent compactor's _next_base_name scan skip it,
-        # and the pending marker makes vacuum_root spare it while the
-        # merge below runs outside the lock
-        os.makedirs(os.path.join(root, base_name), exist_ok=True)
+        # reserve the name UNDER the lock: the marker makes
+        # a concurrent compactor's _next_base_name scan skip it and
+        # vacuum_root spare the dir while the merge below runs outside
+        # the lock. Marker first: no scanner ever sees the dir unshielded
         with open(_pending_marker(root, base_name), "w"):
             pass
+        os.makedirs(os.path.join(root, base_name), exist_ok=True)
     lost_race = False
     try:
         # the expensive merge runs OUTSIDE the lock — ingest keeps
@@ -280,10 +291,7 @@ def compact_root(
             # re-read-and-merge: keep every dir registered since the plan
             now_live, now_ct = read_manifest(root)
             if now_live is None:
-                pend = _pending_bases(root)
-                now_live = [
-                    d for d in _present_dirs(root) if d not in pend
-                ]
+                now_live = _unreserved_dirs(root)
             if any(d not in now_live for d in fold):
                 # a concurrent compact_root already folded (part of) our
                 # fold set and swapped its base in — publishing ours too
@@ -326,22 +334,30 @@ def vacuum_root(root: str) -> List[str]:
     concurrent ``compact_root`` mid-merge, between its reservation and
     its manifest swap — deleting it would publish a manifest pointing
     at a vanished directory. Generation names are never reused while
-    the dir (or its marker) exists."""
+    the dir (or its marker) exists.
+
+    The snapshot reads dirs, then markers, then the manifest: a base
+    seen on disk either still has its marker or was already swapped
+    live (or abandoned) by the time the manifest is read."""
+    present = _present_dirs(root)
+    pending = _pending_bases(root)
     live, ct = read_manifest(root)
     if live is None:
         return []
     keep = set(live)
-    pending = _pending_bases(root)
     dropped = []
-    for d in _present_dirs(root):
+    for d in present:
         if d in keep:
             continue
-        if d in pending:
-            continue  # in-flight compact_root base: not ours to delete
         eid = _epoch_id(d)
         if eid is not None and eid > ct:
             continue  # uncommitted in-flight epoch: not ours to delete
-        shutil.rmtree(os.path.join(root, d))
+        # in-flight compact_root base: not ours to delete (the marker is
+        # re-checked right before the rmtree, not only in the snapshot)
+        if d in pending or os.path.isfile(_pending_marker(root, d)):
+            continue
+        # a lost-race compactor may be removing its own dir right now
+        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
         dropped.append(d)
     for b in pending & keep:
         # compactor crashed between swap and marker removal: the base

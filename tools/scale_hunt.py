@@ -79,6 +79,7 @@ def run_leg(cores: int, n_docs: int, state_path: str) -> dict:
     rec = {
         "t": round(time.time(), 1),
         "sha": bench._sha_label(),
+        "nproc": bench._host_nproc(),
         "cores": cores,
         "n_docs": n_docs,
         "seconds": m["seconds"],
