@@ -2084,7 +2084,7 @@ def q_simhash_incremental(spark, sf_dir):
     r = simhash_dedup_incremental(
         docs.filter(F.col("doc_id") >= 250), "doc_id", "text",
         index_chunks=idx_c, index_fingerprints=idx_f,
-        k=5, bits=64, bands=8, max_hamming=7, broadcast_batch=True,
+        k=5, bits=64, bands=8, max_hamming=7,
     )
     return r["deduped"].select(F.col("doc_id").cast("long").alias("doc_id"))
 
@@ -2129,7 +2129,6 @@ def q_embedding_incremental(spark, sf_dir):
         batch, "vec_id", "embedding",
         index_buckets=idx_b, index_vectors=idx_v,
         dim=64, n_planes=8, threshold=0.6, probes=1,
-        broadcast_batch=True,
     )
     return r["deduped"].select(F.col("vec_id").cast("long").alias("vec_id"))
 
@@ -2880,7 +2879,6 @@ def q_minhash_incremental(spark, sf_dir):
         docs.filter(F.col("doc_id") >= split), "doc_id", "text",
         index_bands=idx_b, index_shingles=idx_s,
         k=5, n_hashes=12, bands=4, verify_threshold=0.4,
-        broadcast_batch=True,
     )
     return r["deduped"].select(F.col("doc_id").cast("long").alias("doc_id"))
 

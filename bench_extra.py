@@ -38,10 +38,10 @@ from timeperiods_spark import (  # noqa: E402
     token_table,
 )
 from timeperiods_spark.operators.dedup import minhash_dedup  # noqa: E402
-from timeperiods_spark.session import get_spark  # noqa: E402
+from timeperiods_spark.session import _default_cpus, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = _default_cpus()
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "1000000"))
 
 

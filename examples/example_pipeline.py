@@ -68,7 +68,7 @@ def main() -> None:
         r = minhash_dedup_incremental(
             docs.filter("doc_id >= 20"), "doc_id", "text",
             index_bands=idx_bands, index_shingles=idx_sh,
-            verify_threshold=0.5, broadcast_batch=True,
+            verify_threshold=0.5,
         )
         survivors = r["deduped"].count()
         print(f"[1] incremental dedup: {survivors} survivors of 20 new docs")

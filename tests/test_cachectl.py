@@ -101,6 +101,40 @@ def test_repeated_calls_launch_the_same_jobs(spark, clean_caches):
     assert all(j[2] == j[3] == j[1] for j in jobs.values()), jobs
 
 
+def test_neardup_bad_arguments_fail_before_spark_work(spark, clean_caches):
+    """A near-dup call with invalid arguments raises before it launches
+    a Spark job or registers a persist: no eager probe runs for a bad
+    ``method``, and a half-given index leaves no cache entry behind."""
+    from timeperiods_spark.operators import dedup as D
+
+    docs = spark.range(8).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("doc text"), F.col("id")).alias("text"),
+    )
+    vecs = spark.range(8).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
+    )
+    calls = [
+        lambda: D.minhash_dedup(docs, "doc_id", "text", method="bogus"),
+        lambda: D.minhash_dedup_incremental(
+            docs, "doc_id", "text", index_bands=docs
+        ),
+        lambda: D.simhash_dedup_incremental(
+            docs, "doc_id", "text", index_chunks=docs
+        ),
+        lambda: D.embedding_dedup_incremental(
+            vecs, index_buckets=vecs, dim=2, n_planes=2
+        ),
+    ]
+    for call in calls:
+        def raises():
+            with pytest.raises(ValueError):
+                call()
+        assert _spark_jobs(spark, raises) == 0
+        assert cachectl.held_plans() == {}
+
+
 def test_repeated_calls_bounded_storage(spark, clean_caches):
     """N repeated remove_overlaps + merge_intervals calls on distinct
     inputs hold at most PLANS_PER_SITE cached intermediates per site,

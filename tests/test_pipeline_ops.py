@@ -435,7 +435,7 @@ def test_simhash_incremental_equals_whole_corpus(docs):
         b2, "doc_id", "text",
         index_chunks=r1["new_chunks"],
         index_fingerprints=r1["new_fingerprints"],
-        max_hamming=7, broadcast_batch=True,
+        max_hamming=7,
     )
     inc = {
         r["doc_id"]
@@ -500,7 +500,7 @@ def test_embedding_incremental_equals_whole_corpus(spark):
     r2 = embedding_dedup_incremental(
         b2, "vec_id", "embedding",
         index_buckets=r1["new_buckets"], index_vectors=r1["new_vectors"],
-        dim=8, n_planes=4, threshold=0.8, probes=1, broadcast_batch=True,
+        dim=8, n_planes=4, threshold=0.8, probes=1,
     )
     inc = {
         r["vec_id"]

@@ -146,12 +146,28 @@ def test_catalog_read_pushes_down(spark, tmp_path):
     assert "xminstart" not in cols and "xmaxend" not in cols, cols
 
 
-def test_minhash_band_join_ships_no_arrays(spark):
-    """The band self-join + pair dedup must shuffle only (id, band,
-    bsig): carrying the shingle-hash arrays (~doc length) through the
-    band exchange, multiplied by `bands`, is the shuffle-bloat
-    anti-pattern this pins against. Shingle sets re-attach to unique
-    candidate pairs via id-equi joins instead."""
+def _neardup_docs(spark, n: int = 60):
+    """Deterministic near-dup corpus: docs i and i+20 share their text."""
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ", F.lit("doc"), (F.col("id") % 20).cast("string"),
+            F.lit("shares words with its twin and some filler text"),
+        ).alias("text"),
+    )
+
+
+def _neardup_vectors(spark, n: int = 60):
+    """Deterministic 8-dim vectors: i and i+20 are the same vector."""
+    return spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[F.sin((F.col("id") % 20 + 1) * (i + 1)) for i in range(8)]
+        ).alias("embedding"),
+    )
+
+
+def _minhash_pairs(spark):
     from timeperiods_spark.operators.dedup import minhash_candidate_pairs
 
     docs = spark.createDataFrame(
@@ -162,24 +178,160 @@ def test_minhash_band_join_ships_no_arrays(spark):
     # the shingle cache, after which AQE broadcasts this tiny band join
     # and the exchange under inspection disappears — the pin is about
     # the lazy plan's shuffle payload
-    out = minhash_candidate_pairs(
+    return minhash_candidate_pairs(
         docs, "doc_id", "text", verify_threshold=0.1, hot_bucket_warn=False
     )
+
+
+def _minhash_incremental(spark):
+    from timeperiods_spark.operators.dedup import (
+        build_minhash_index,
+        minhash_dedup_incremental,
+    )
+
+    docs = _neardup_docs(spark)
+    idx_b, idx_s = build_minhash_index(
+        docs.filter("doc_id < 30"), "doc_id", "text"
+    )
+    return minhash_dedup_incremental(
+        docs.filter("doc_id >= 30"), "doc_id", "text",
+        index_bands=idx_b, index_shingles=idx_s, verify_threshold=0.5,
+    )["deduped"]
+
+
+def _embedding_pairs(spark):
+    from timeperiods_spark.operators.dedup import embedding_neardup_pairs
+
+    return embedding_neardup_pairs(
+        _neardup_vectors(spark), dim=8, n_planes=4, threshold=0.8
+    )
+
+
+@pytest.fixture()
+def no_auto_broadcast(spark):
+    """Tiny test inputs would otherwise be broadcast whole, leaving no
+    band exchange to inspect; explicit broadcast hints still apply."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize(
+    "build, key, payload",
+    [
+        (_minhash_pairs, r"\bbsig", "hashes"),
+        (_minhash_incremental, r"\bbsig", "hashes"),
+        (_embedding_pairs, r"\b(__p?b|bucket_[ab])#", "v"),
+    ],
+    ids=["minhash", "minhash_incremental", "embedding"],
+)
+def test_minhash_band_join_ships_no_arrays(
+    spark, no_auto_broadcast, build, key, payload
+):
+    """The band join + pair dedup must shuffle only (id, band key):
+    carrying the payload (shingle-hash arrays ~doc length, or vectors)
+    through the band exchange, multiplied by the bands or probes per
+    row, is the shuffle-bloat anti-pattern this pins against. Payloads
+    re-attach to unique candidate pairs via id-equi joins instead."""
+    out = build(spark)
     formatted = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
     # formatted explain lists every node's Input/Output columns: no
-    # Exchange that partitions by the band signature may carry a
-    # shingle-hashes array column
+    # Exchange that partitions by the band key may carry the payload
     exchanges = re.findall(
         r"\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]\s*\n"
         r"Arguments: hashpartitioning\(([^)]*)\)",
         formatted,
     )
-    band_exchanges = [cols for cols, keys in exchanges if "bsig" in keys]
+    band_exchanges = [
+        cols for cols, keys in exchanges if re.search(key, keys)
+    ]
     assert band_exchanges, formatted[:2000]  # the band join must exist
     for cols in band_exchanges:
-        assert "hashes" not in cols, cols
+        assert not re.search(rf"\b{payload}#", cols), cols
+
+
+def _simhash_incremental(spark):
+    from timeperiods_spark.operators.dedup import (
+        build_simhash_index,
+        simhash_dedup_incremental,
+    )
+
+    docs = _neardup_docs(spark)
+    idx_c, idx_f = build_simhash_index(
+        docs.filter("doc_id < 30"), "doc_id", "text"
+    )
+    return simhash_dedup_incremental(
+        docs.filter("doc_id >= 30"), "doc_id", "text",
+        index_chunks=idx_c, index_fingerprints=idx_f, max_hamming=7,
+    )["deduped"]
+
+
+def _embedding_incremental(spark):
+    from timeperiods_spark.operators.dedup import (
+        build_embedding_index,
+        embedding_dedup_incremental,
+    )
+
+    vecs = _neardup_vectors(spark)
+    idx_b, idx_v = build_embedding_index(
+        vecs.filter("vec_id < 30"), dim=8, n_planes=4
+    )
+    return embedding_dedup_incremental(
+        vecs.filter("vec_id >= 30"), index_buckets=idx_b,
+        index_vectors=idx_v, dim=8, n_planes=4, threshold=0.8,
+    )["deduped"]
+
+
+def _minhash_dedup(spark, **kw):
+    from timeperiods_spark.operators.dedup import minhash_dedup
+
+    return minhash_dedup(
+        _neardup_docs(spark), "doc_id", "text", verify_threshold=0.5, **kw
+    )
+
+
+def _simhash_pairs(spark):
+    from timeperiods_spark.operators.dedup import simhash_pairs
+
+    return simhash_pairs(_neardup_docs(spark), "doc_id", "text", max_hamming=7)
+
+
+#: Spark jobs one call plus one count() launches on a clean cache
+_NEARDUP_JOBS = {
+    "minhash_dedup_capped": (
+        lambda s: _minhash_dedup(s, max_bucket_size=30), 18
+    ),
+    "minhash_dedup_probe": (_minhash_dedup, 12),
+    "simhash_pairs": (_simhash_pairs, 3),
+    "embedding_neardup_pairs": (_embedding_pairs, 4),
+    "minhash_dedup_incremental": (_minhash_incremental, 15),
+    "simhash_dedup_incremental": (_simhash_incremental, 15),
+    "embedding_dedup_incremental": (_embedding_incremental, 15),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_NEARDUP_JOBS))
+def test_neardup_jobs_per_call(spark, name):
+    """Each near-dup entry point launches a pinned number of Spark jobs
+    for one call plus one count(): a hidden extra pass over the input
+    (an eager probe, a re-run of the banding) shows up here as a
+    higher count."""
+    from timeperiods_spark.plans import cachectl
+
+    from .test_cachectl import _spark_jobs
+
+    cachectl.release()
+    spark.catalog.clearCache()
+    build, expected = _NEARDUP_JOBS[name]
+    try:
+        jobs = _spark_jobs(spark, lambda: build(spark).count())
+    finally:
+        cachectl.release()
+    assert jobs == expected
 
 
 def test_minhash_hot_bucket_probe_fills_banded_cache(spark):

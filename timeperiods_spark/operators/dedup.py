@@ -1,39 +1,57 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Exact dedup, n-gram Jaccard, MinHash+LSH banding, and SimHash — all as
-native DataFrame expressions (no Python in the hot path). Hashing comes
-from functions.texthash so every operator here has a bit-identical
-ANSI-SQL twin for oracle verification; production runs can pass
-``hash_fn="xxhash64"`` where cross-engine determinism isn't needed.
+Exact dedup, n-gram Jaccard, MinHash+LSH banding, SimHash and SRP
+embedding-cosine — all as native DataFrame expressions (no Python in
+the hot path). Hashing comes from functions.texthash so every operator
+here has a bit-identical ANSI-SQL twin for oracle verification;
+production runs can pass ``hash_fn="xxhash64"`` where cross-engine
+determinism isn't needed.
 
-Scale design (the 100 TB case):
-- Exact dedup is one hash aggregate — shuffle keyed by the dedup key.
-- MinHash candidate generation shuffles on (band_id, band_signature):
-  high cardinality, naturally even; each bucket's pair fan-out is
-  bounded by bucket size, and near-duplicate clusters are exactly the
-  skew you WANT co-located. The band join is a self equi join, never a
-  cross join.
-- Verification (exact Jaccard on candidate pairs) touches only
-  candidate pairs, not the n^2 space.
+The three banded families (MinHash, SimHash, SRP) share one skeleton,
+and each is just a key definition, a payload and a score:
+
+1. Key frame: ``(id, band, key)`` rows (SRP: ``(id, bucket)``).
+2. Hot-bucket cap: a count aggregate finds buckets over the cap, a
+   broadcast ``left_anti`` join drops their rows.
+3. Band equi-join with ``id_a < id_b``: a self join for whole-corpus
+   calls; index × batch probe ∪ batch-internal for incremental calls.
+4. Exact verify: the payload (shingle set, vector) re-attaches to the
+   UNIQUE candidate pairs with two id-equi joins, is scored, filtered.
+5. Election: single-hop losers or :func:`connected_components`, then
+   a ``left_anti`` join.
+
+Scale design (the 100 TB case): the band join shuffles on (band, key)
+— high cardinality, naturally even; each bucket's pair fan-out is
+bounded by bucket size, and near-duplicate clusters are exactly the
+skew you WANT co-located. It is never a cross join, and it carries only
+ids and keys: shipping payload arrays through the band exchange,
+multiplied by the bands per row, is the classic MinHash shuffle-bloat
+anti-pattern (pinned by tests/test_plans.py). Verification touches
+only candidate pairs, not the n^2 space.
 """
 
 from __future__ import annotations
 
 import warnings
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions import texthash as TH
 from ..functions.grid import spread_input
 from ..plans.cachectl import managed_persist
+from .similarity import _cosine_pre, _norm, srp_bucket, srp_probe_buckets
 
 #: hot-bucket visibility thresholds (cap off): warn when the largest
 #: (band,bsig) bucket exceeds BOTH an absolute floor and a multiple of
 #: the MEDIAN bucket size (median: hot buckets would inflate a mean)
 _HOT_BUCKET_MIN = 64
 _HOT_BUCKET_RATIO = 16
+
+_MINHASH_KEYS = ("band", "bsig")
+_SIMHASH_KEYS = ("band", "chunk")
+_SRP_KEYS = ("bucket",)
 
 
 def exact_dedup(
@@ -69,6 +87,174 @@ def shingle_frame(
     )
 
 
+# --------------------------------------------------------------------
+# the banded skeleton
+# --------------------------------------------------------------------
+
+
+def _band_width(total: int, bands: int, what: str) -> int:
+    if total % bands != 0:
+        raise ValueError(f"bands must divide {what}")
+    return total // bands
+
+
+def _index(
+    keys: Optional[DataFrame], payload: Optional[DataFrame]
+) -> Optional[tuple]:
+    """The (keys, payload) index pair, or None for a cold start."""
+    if (keys is None) != (payload is None):
+        raise ValueError("pass both index frames or neither")
+    return None if keys is None else (keys, payload)
+
+
+def _band_rows(df: DataFrame, key: str, parts: list, *keep: str) -> DataFrame:
+    """(id, *keep, band, key) rows: band ``i`` holds ``parts[i]``."""
+    bb = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(bi).alias("band"), p.alias(key))
+                for bi, p in enumerate(parts)
+            ]
+        )
+    ).alias("bb")
+    return df.select("id", *keep, bb).select("id", *keep, "bb.band", f"bb.{key}")
+
+
+def _side(df: DataFrame, s: str, cols: dict) -> DataFrame:
+    """``df``'s id and ``cols`` ({name: column}), suffixed ``_<s>``."""
+    return df.select(
+        F.col("id").alias(f"id_{s}"),
+        *[c.alias(f"{name}_{s}") for name, c in cols.items()],
+    )
+
+
+def _band_pairs(
+    left: DataFrame, right: DataFrame, keys: Sequence[str],
+    carry: Optional[tuple] = None,
+) -> DataFrame:
+    """(id_a, id_b) of left × right rows sharing every key, id_a < id_b.
+    ``carry=(payload, score)`` scores each pair from a (fixed-width)
+    payload carried through the join instead of re-attached."""
+    payload, score = carry or ({}, None)
+    cols = {**payload, **{k: F.col(k) for k in keys}}
+    on = [F.col(f"{k}_a") == F.col(f"{k}_b") for k in keys]
+    return _side(left, "a", cols).join(
+        _side(right, "b", cols), on + [F.col("id_a") < F.col("id_b")]
+    ).select("id_a", "id_b", *([score] if carry else []))
+
+
+def _candidates(
+    keyed: DataFrame,
+    keys: Sequence[str],
+    *,
+    index: Optional[DataFrame] = None,
+    cap: Optional[int] = None,
+    probe: Optional[Callable[[DataFrame], DataFrame]] = None,
+    carry: Optional[tuple] = None,
+) -> DataFrame:
+    """Steps 2-3: unique (id_a, id_b) pairs of ``keyed`` rows (the
+    corpus, or the batch when ``index`` is given) sharing a band key.
+
+    ``cap`` drops buckets holding more than ``cap`` rows, counted over
+    index + batch. ``probe`` maps key rows to the keys they probe (SRP
+    multi-probe); it runs on the batch side only, which is broadcast
+    into the index scan (the incremental shape is batch << index)."""
+    if cap is not None:
+        counted = keyed if index is None else index.select(*keys).unionByName(
+            keyed.select(*keys)
+        )
+        # hot buckets are by definition FEW (each holds > cap rows), so
+        # the key set broadcasts
+        hot = F.broadcast(
+            counted.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > int(cap))
+            .select(*keys)
+        )
+        keyed = keyed.join(hot, list(keys), "left_anti")
+        if index is not None:
+            index = index.join(hot, list(keys), "left_anti")
+    probes = keyed if probe is None else probe(keyed)
+    pairs = _band_pairs(probes, keyed, keys, carry)
+    if index is not None:
+        pairs = _band_pairs(index, F.broadcast(probes), keys).unionByName(pairs)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
+def _verify(
+    cand: DataFrame, left: DataFrame, right: DataFrame,
+    payload: dict, score: Column, keep: Column,
+) -> DataFrame:
+    """Step 4: attach ``payload`` ({name: column}) of ``left`` to id_a
+    and of ``right`` to id_b, score the pair, keep the matches."""
+    return (
+        cand.join(_side(left, "a", payload), "id_a")
+        .join(_side(right, "b", payload), "id_b")
+        .select("id_a", "id_b", score)
+        .filter(keep)
+    )
+
+
+def _elect(
+    df: DataFrame, id_col: str, pairs: DataFrame, components: bool = False
+) -> DataFrame:
+    """Step 5: drop every matched id_b (single hop), or every id that
+    is not its component's minimum."""
+    if components:
+        losers = connected_components(pairs).filter(
+            F.col("id") != F.col("comp")
+        ).select(F.col("id").alias(id_col))
+    else:
+        losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
+    return df.join(losers, id_col, "left_anti")
+
+
+def _dedup_batch(
+    new_batch: DataFrame, id_col: str, batch: tuple, index: Optional[tuple],
+    keys: Sequence[str], verify: tuple, **cand_kw,
+) -> DataFrame:
+    """Steps 2-5 for an incremental call: the ``batch`` (keys, payload)
+    frames against the ``index`` pair (None: an empty index). A batch
+    row is dropped when any verified match has a smaller id."""
+    batch_keys, batch_payload = batch
+    index_keys, index_payload = index or (
+        batch_keys.filter(F.lit(False)), batch_payload.filter(F.lit(False))
+    )
+    cand = _candidates(batch_keys, keys, index=index_keys, **cand_kw)
+    # the left side may come from either corpus, the right side is
+    # always a batch row
+    every = index_payload.select(*batch_payload.columns).unionByName(batch_payload)
+    return _elect(new_batch, id_col, _verify(cand, every, batch_payload, *verify))
+
+
+# --------------------------------------------------------------------
+# n-gram Jaccard and MinHash
+# --------------------------------------------------------------------
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of two distinct-element arrays: |A ∪ B| = |A| +
+    |B| - |A ∩ B|, one set pass instead of two (array_union was ~40%
+    of the verification cost)."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return inter / F.when(union > 0, union)
+
+
+def _minhash_verify(threshold: float) -> tuple:
+    return (
+        {"h": F.col("hashes")},
+        _jaccard("h_a", "h_b").alias("jaccard"),
+        F.col("jaccard") >= threshold,
+    )
+
+
+def _nonempty_shingles(df, id_col, text_col, k, hash_fn) -> DataFrame:
+    return shingle_frame(df, id_col, text_col, k, hash_fn).filter(
+        F.size("hashes") > 0
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -90,20 +276,29 @@ def ngram_jaccard_pairs(
     # (see OPTIMIZATION_r07.md "Float-boundary discipline"). At corpus
     # scale, pre-shingle to a table instead (the operator contract
     # already recommends it).
-    a = sh.select(F.col("id").alias("id_a"), F.col("hashes").alias("h_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("hashes").alias("h_b"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    # |A ∪ B| = |A| + |B| - |A ∩ B| (arrays are distinct): one set pass
-    # instead of two — array_union was ~40% of the verification cost
-    inter = F.size(F.array_intersect("h_a", "h_b"))
-    union = F.size("h_a") + F.size("h_b") - inter
-    return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            (inter / F.when(union > 0, union)).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    payload, score, keep = _minhash_verify(threshold)
+    pairs = _side(sh, "a", payload).join(
+        _side(sh, "b", payload), F.col("id_a") < F.col("id_b")
+    )
+    return pairs.select("id_a", "id_b", score).filter(keep)
+
+
+def minhash_band_frame(
+    shingles: DataFrame, *, n_hashes: int = 12, bands: int = 4
+) -> DataFrame:
+    """(id, band, bsig) band rows from a shingle frame — the persisted
+    LSH index layout. One row per (doc, band); the shingle arrays stay
+    in their own (id, hashes) table so the index does not repeat a
+    document's shingle set ``bands`` times."""
+    r = _band_width(n_hashes, bands, "n_hashes")
+    sig = TH.minhash_signature_spark(F.col("hashes"), n_hashes)
+    return _band_rows(
+        shingles.select("id", sig.alias("sig")),
+        "bsig",
+        [
+            F.slice("sig", bi * r + 1, r).cast("array<long>")
+            for bi in range(bands)
+        ],
     )
 
 
@@ -153,38 +348,10 @@ def minhash_candidate_pairs(
     self join then reads (construction is one job, never a double run
     of the shingle→minhash stage). Pass ``hot_bucket_warn=False`` for
     a fully lazy frame."""
-    if n_hashes % bands != 0:
-        raise ValueError("bands must divide n_hashes")
-    r = n_hashes // bands
-    sh = shingle_frame(df, id_col, text_col, k, hash_fn).filter(
-        F.size("hashes") > 0
-    )
+    _band_width(n_hashes, bands, "n_hashes")
+    sh = _nonempty_shingles(df, id_col, text_col, k, hash_fn)
     if verify_threshold is not None:
         sh = managed_persist(sh, "minhash_candidate_pairs.shingles")
-    # The band self-join and the pair dedup carry ONLY (id, band, bsig):
-    # shipping the shingle-hash arrays (~doc length) through the band
-    # exchange AND the dropDuplicates, multiplied by `bands`, is the
-    # classic MinHash shuffle-bloat anti-pattern. Shingle sets are
-    # re-attached to the (much smaller) set of UNIQUE candidate pairs
-    # with two id-equi joins — the same shape the DuckDB oracle uses
-    # (__spark_entry__.py `withsets`). Pinned by tests/test_plans.py.
-    banded = sh.select(
-        "id",
-        TH.minhash_signature_spark(F.col("hashes"), n_hashes).alias("sig"),
-    ).select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.slice("sig", bi * r + 1, r).cast("array<long>").alias("bsig"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bsig")
     # The slim (id, band, bsig) frame is consumed at least twice (both
     # self-join sides) and up to four times with the hot-bucket cap (its
     # aggregate builds one broadcast per anti-join side): unpersisted,
@@ -195,24 +362,11 @@ def minhash_candidate_pairs(
     # every consumer reads the cache (persist alone is lazy, so the
     # no-warn path stays fully lazy).
     banded = managed_persist(
-        banded, "minhash_candidate_pairs.banded", StorageLevel.DISK_ONLY
+        minhash_band_frame(sh, n_hashes=n_hashes, bands=bands),
+        "minhash_candidate_pairs.banded",
+        StorageLevel.DISK_ONLY,
     )
-
-    if max_bucket_size is not None:
-        # hot buckets are by definition FEW (each holds > cap docs),
-        # so the key set broadcasts; one map-side-combined aggregate
-        # finds them, one broadcast anti join drops their band rows.
-        # Both the aggregate and the anti-join probe read the banded
-        # cache; the cheap broadcast-probe filter is re-applied per
-        # consumer instead of re-running the banding.
-        hot = (
-            banded.groupBy("band", "bsig")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > int(max_bucket_size))
-            .select("band", "bsig")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "bsig"], "left_anti")
-    elif hot_bucket_warn:
+    if max_bucket_size is None and hot_bucket_warn:
         # cap off = exact-by-default (the oracle setting), but a naive
         # caller on boilerplate text then silently pays m^2/2 from one
         # over-popular bucket (VERDICT r4 finding 2). One extra
@@ -221,7 +375,7 @@ def minhash_candidate_pairs(
         # EAGER action over the banded cache persisted above (ADVICE
         # r5: it materializes the cache every consumer then reads).
         st = (
-            banded.groupBy("band", "bsig")
+            banded.groupBy(*_MINHASH_KEYS)
             .agg(F.count(F.lit(1)).alias("__n"))
             .agg(
                 F.max("__n").alias("mx"),
@@ -243,68 +397,10 @@ def minhash_candidate_pairs(
                 "hot_bucket_warn=False to silence this check.",
                 stacklevel=3,
             )
-
-    left = banded.select(
-        F.col("id").alias("id_a"),
-        F.col("band").alias("band_a"),
-        F.col("bsig").alias("bsig_a"),
-    )
-    right = banded.select(
-        F.col("id").alias("id_b"),
-        F.col("band").alias("band_b"),
-        F.col("bsig").alias("bsig_b"),
-    )
-    cand = (
-        left.join(
-            right,
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("bsig_a") == F.col("bsig_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _candidates(banded, _MINHASH_KEYS, cap=max_bucket_size)
     if verify_threshold is None:
         return cand
-    withsets = cand.join(
-        sh.select(F.col("id").alias("id_a"), F.col("hashes").alias("h_a")), "id_a"
-    ).join(
-        sh.select(F.col("id").alias("id_b"), F.col("hashes").alias("h_b")), "id_b"
-    )
-    inter = F.size(F.array_intersect("h_a", "h_b"))
-    union = F.size("h_a") + F.size("h_b") - inter  # arrays are distinct
-    return withsets.select(
-        "id_a", "id_b", (inter / F.when(union > 0, union)).alias("jaccard")
-    ).filter(F.col("jaccard") >= verify_threshold)
-
-
-def minhash_band_frame(
-    shingles: DataFrame, *, n_hashes: int = 12, bands: int = 4
-) -> DataFrame:
-    """(id, band, bsig) band rows from a shingle frame — the persisted
-    LSH index layout. One row per (doc, band); the shingle arrays stay
-    in their own (id, hashes) table so the index does not repeat a
-    document's shingle set ``bands`` times."""
-    if n_hashes % bands != 0:
-        raise ValueError("bands must divide n_hashes")
-    r = n_hashes // bands
-    return shingles.select(
-        "id",
-        TH.minhash_signature_spark(F.col("hashes"), n_hashes).alias("sig"),
-    ).select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.slice("sig", bi * r + 1, r).cast("array<long>").alias("bsig"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bsig")
+    return _verify(cand, sh, sh, *_minhash_verify(verify_threshold))
 
 
 def build_minhash_index(
@@ -323,9 +419,7 @@ def build_minhash_index(
     by (band, bsig-hash) at scale); nightly batches then probe them via
     :func:`minhash_dedup_incremental` instead of re-scanning the whole
     corpus. Index and probes must share one ``hash_fn``."""
-    sh = shingle_frame(df, id_col, text_col, k, hash_fn).filter(
-        F.size("hashes") > 0
-    )
+    sh = _nonempty_shingles(df, id_col, text_col, k, hash_fn)
     return minhash_band_frame(sh, n_hashes=n_hashes, bands=bands), sh
 
 
@@ -340,7 +434,6 @@ def minhash_dedup_incremental(
     n_hashes: int = 12,
     bands: int = 4,
     verify_threshold: float = 0.7,
-    broadcast_batch: bool = False,
     max_bucket_size: Optional[int] = None,
     hash_fn: str = "poly",
 ) -> dict:
@@ -358,10 +451,12 @@ def minhash_dedup_incremental(
 
     The batch is shingled and banded once; candidates are (a) batch
     docs sharing a band with an INDEXED doc (an equi probe of the index
-    keyed by (band, bsig) — only the batch's band keys travel) and (b)
-    batch-internal pairs (the same self join the whole-corpus path
-    uses). Exact Jaccard verifies candidates; a batch doc is dropped
-    when any verified match has a smaller id (single_hop semantics).
+    keyed by (band, bsig), with the batch band frame broadcast — the
+    designed shape is batch << corpus index, so the probe is a map-side
+    join over the index scan) and (b) batch-internal pairs (the same
+    self join the whole-corpus path uses). Exact Jaccard verifies
+    candidates; a batch doc is dropped when any verified match has a
+    smaller id (single_hop semantics).
 
     Returns ``{"deduped", "new_bands", "new_shingles"}``. The new
     index rows cover EVERY batch doc — survivors AND dropped docs —
@@ -373,115 +468,29 @@ def minhash_dedup_incremental(
     survivor set; with out-of-order ids a cross pair whose batch doc
     precedes the indexed doc is ignored (the already-published indexed
     doc cannot be retroactively dropped).
-
-    ``broadcast_batch=True`` hints the batch band frame broadcast-able
-    (the designed shape: batch << corpus index), turning the index
-    probe into a map-side join over the index scan.
     """
-    batch_sh = shingle_frame(new_batch, id_col, text_col, k, hash_fn).filter(
-        F.size("hashes") > 0
-    )
+    index = _index(index_bands, index_shingles)
+    _band_width(n_hashes, bands, "n_hashes")
     # the batch shingle frame feeds banding, the pair verify, and the
     # returned new_shingles (stream_dedup_ingest unpersists it eagerly
     # once the epoch is materialized)
-    batch_sh = managed_persist(batch_sh, "minhash_dedup_incremental.shingles")
-    batch_bands = minhash_band_frame(batch_sh, n_hashes=n_hashes, bands=bands)
+    batch_sh = managed_persist(
+        _nonempty_shingles(new_batch, id_col, text_col, k, hash_fn),
+        "minhash_dedup_incremental.shingles",
+    )
     # NOTE: five consumers re-run the banding of the batch (hot-bucket
     # union, index probe, both internal join sides, new_bands); a
     # per-call persist was measured and WITHDRAWN (frozen-oracle
     # 6dp-boundary interference, OPTIMIZATION_r07.md). The batch is
     # small by contract; the cached SHINGLE frame bounds the rework.
-    if index_bands is None or index_shingles is None:
-        # cold start: empty index with the right schemas
-        if index_bands is not None or index_shingles is not None:
-            raise ValueError("pass both index frames or neither")
-        index_bands = batch_bands.filter(F.lit(False))
-        index_shingles = batch_sh.filter(F.lit(False))
-
-    full_batch_bands = batch_bands
-    if max_bucket_size is not None:
-        # cap on the COMBINED bucket population; the probe and the
-        # batch-internal join both drop hot-bucket rows, but the
-        # returned new_bands stay complete (read-side decision only)
-        hot = (
-            index_bands.select("band", "bsig")
-            .unionByName(batch_bands.select("band", "bsig"))
-            .groupBy("band", "bsig")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > int(max_bucket_size))
-            .select("band", "bsig")
-        )
-        batch_bands = batch_bands.join(
-            F.broadcast(hot), ["band", "bsig"], "left_anti"
-        )
-        index_bands = index_bands.join(
-            F.broadcast(hot), ["band", "bsig"], "left_anti"
-        )
-
-    probe = F.broadcast(batch_bands) if broadcast_batch else batch_bands
-    cross = (
-        index_bands.select(
-            F.col("id").alias("id_a"),
-            F.col("band").alias("band_a"),
-            F.col("bsig").alias("bsig_a"),
-        )
-        .join(
-            probe.select(
-                F.col("id").alias("id_b"),
-                F.col("band").alias("band_b"),
-                F.col("bsig").alias("bsig_b"),
-            ),
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("bsig_a") == F.col("bsig_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-    )
-    internal = (
-        batch_bands.select(
-            F.col("id").alias("id_a"),
-            F.col("band").alias("band_a"),
-            F.col("bsig").alias("bsig_a"),
-        )
-        .join(
-            batch_bands.select(
-                F.col("id").alias("id_b"),
-                F.col("band").alias("band_b"),
-                F.col("bsig").alias("bsig_b"),
-            ),
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("bsig_a") == F.col("bsig_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-    )
-    cand = cross.unionByName(internal).dropDuplicates(["id_a", "id_b"])
-
-    # verify on UNIQUE pairs only; the left side may come from either
-    # corpus, the right side is always a batch doc
-    all_sh = index_shingles.select("id", "hashes").unionByName(
-        batch_sh.select("id", "hashes")
-    )
-    withsets = cand.join(
-        all_sh.select(F.col("id").alias("id_a"), F.col("hashes").alias("h_a")),
-        "id_a",
-    ).join(
-        batch_sh.select(F.col("id").alias("id_b"), F.col("hashes").alias("h_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("h_a", "h_b"))
-    union = F.size("h_a") + F.size("h_b") - inter  # arrays are distinct
-    losers = (
-        withsets.select(
-            "id_b", (inter / F.when(union > 0, union)).alias("jaccard")
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
-        .select(F.col("id_b").alias(id_col))
-        .dropDuplicates()
+    batch_bands = minhash_band_frame(batch_sh, n_hashes=n_hashes, bands=bands)
+    deduped = _dedup_batch(
+        new_batch, id_col, (batch_bands, batch_sh), index, _MINHASH_KEYS,
+        _minhash_verify(verify_threshold), cap=max_bucket_size,
     )
     return {
-        "deduped": new_batch.join(losers, id_col, "left_anti"),
-        "new_bands": full_batch_bands,
+        "deduped": deduped,
+        "new_bands": batch_bands,
         "new_shingles": batch_sh,
     }
 
@@ -568,21 +577,55 @@ def minhash_dedup(
     ``method="components"``: exact one-survivor-per-connected-component
     (min id), via :func:`connected_components` over the verified pairs.
     """
+    if method not in ("single_hop", "components"):
+        raise ValueError("method must be 'single_hop' or 'components'")
     pairs = minhash_candidate_pairs(
         df, id_col, text_col, k=k, n_hashes=n_hashes, bands=bands,
         verify_threshold=verify_threshold, max_bucket_size=max_bucket_size,
         hash_fn=hash_fn, hot_bucket_warn=hot_bucket_warn,
     )
-    if method == "components":
-        cc = connected_components(pairs)
-        losers = cc.filter(F.col("id") != F.col("comp")).select(
-            F.col("id").alias(id_col)
-        )
-    elif method == "single_hop":
-        losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
-    else:
-        raise ValueError("method must be 'single_hop' or 'components'")
-    return df.join(losers, id_col, "left_anti")
+    return _elect(df, id_col, pairs, components=method == "components")
+
+
+# --------------------------------------------------------------------
+# SRP embedding cosine
+# --------------------------------------------------------------------
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return spread_input(df).select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    )
+
+
+def _srp_keys(vectors: DataFrame, dim: int, n_planes: int) -> DataFrame:
+    return vectors.select(
+        "id", srp_bucket(F.col("v"), dim, n_planes).alias("bucket")
+    )
+
+
+def _srp_probe(n_planes: int, probes: int):
+    """Key rows → one row per bucket within ``probes`` plane flips."""
+    return lambda keyed: keyed.select(
+        "id",
+        F.explode(srp_probe_buckets(F.col("bucket"), n_planes, probes)).alias(
+            "bucket"
+        ),
+    )
+
+
+def _cosine_verify(threshold: float) -> tuple:
+    # norms attach per ROW (one array pass each), so the verify scores
+    # each candidate with a single dot-product pass — cosine()'s
+    # single-expression form would re-derive both norms per PAIR
+    return (
+        {"v": F.col("v"), "n": _norm(F.col("v"))},
+        _cosine_pre(
+            F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")
+        ).alias("cosine"),
+        F.col("cosine") >= threshold,
+    )
 
 
 def embedding_neardup_pairs(
@@ -603,8 +646,8 @@ def embedding_neardup_pairs(
     each row also probes every bucket one plane-flip away, ``probes=1``
     — without it, recall for cosine≈0.95 pairs is only ~(1-θ/π)^planes
     ≈ 0.42 at 8 planes); exact cosine verifies candidates. Same scale
-    shape as the MinHash path: the band/bucket join and pair dedup
-    carry only (id, bucket), vectors re-attach to UNIQUE pairs via two
+    shape as the MinHash path: the bucket join and pair dedup carry
+    only (id, bucket), vectors re-attach to UNIQUE pairs via two
     id-equi joins. Columns: id_a, id_b (id_a < id_b), cosine.
 
     ``max_bucket_size`` drops over-popular SRP buckets (an m-vector
@@ -613,62 +656,14 @@ def embedding_neardup_pairs(
     guard and recall trade-off as :func:`minhash_candidate_pairs`.
     The cap keys on a row's OWN bucket, so a capped bucket neither
     probes nor is probed."""
-    from .similarity import _cosine_pre, _norm, srp_bucket, srp_probe_buckets
-
-    base = spread_input(df).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("__n", _norm(F.col("v")))
-    # The norm column attaches per ROW so the verify join scores each
-    # candidate pair with ONE dot-product pass instead of re-deriving
-    # both norms per pair (lambda aggregates are invisible to
-    # subexpression elimination). A per-call persist of this frame was
-    # measured and WITHDRAWN (frozen-oracle 6dp-boundary interference,
-    # OPTIMIZATION_r07.md).
-    bucketed = base.withColumn("__b", srp_bucket(F.col("v"), dim, n_planes))
-    if max_bucket_size is not None:
-        hot = (
-            bucketed.groupBy("__b")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > int(max_bucket_size))
-            .select("__b")
-        )
-        bucketed = bucketed.join(F.broadcast(hot), ["__b"], "left_anti")
-    probed = bucketed.select(
-        F.col("id").alias("id_a"),
-        F.explode(srp_probe_buckets(F.col("__b"), n_planes, probes)).alias("__pb"),
+    # A per-call persist of the vector frame was measured and WITHDRAWN
+    # (frozen-oracle 6dp-boundary interference, OPTIMIZATION_r07.md).
+    vecs = _vectors(df, id_col, vec_col)
+    cand = _candidates(
+        _srp_keys(vecs, dim, n_planes), _SRP_KEYS, cap=max_bucket_size,
+        probe=_srp_probe(n_planes, probes),
     )
-    right = bucketed.select(F.col("id").alias("id_b"), F.col("__b"))
-    cand = (
-        probed.join(
-            right,
-            (F.col("__pb") == F.col("__b")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    withvecs = cand.join(
-        base.select(
-            F.col("id").alias("id_a"),
-            F.col("v").alias("v_a"),
-            F.col("__n").alias("n_a"),
-        ),
-        "id_a",
-    ).join(
-        base.select(
-            F.col("id").alias("id_b"),
-            F.col("v").alias("v_b"),
-            F.col("__n").alias("n_b"),
-        ),
-        "id_b",
-    )
-    return withvecs.select(
-        "id_a",
-        "id_b",
-        _cosine_pre(
-            F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")
-        ).alias("cosine"),
-    ).filter(F.col("cosine") >= threshold)
+    return _verify(cand, vecs, vecs, *_cosine_verify(threshold))
 
 
 def build_embedding_index(
@@ -686,16 +681,8 @@ def build_embedding_index(
     bucket table by a hash of bucket at scale); nightly batches then
     probe them via :func:`embedding_dedup_incremental` instead of
     re-bucketing the whole corpus per batch."""
-    from .similarity import srp_bucket
-
-    base = spread_input(df).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    buckets = base.select(
-        "id", srp_bucket(F.col("v"), dim, n_planes).alias("bucket")
-    )
-    return buckets, base
+    vecs = _vectors(df, id_col, vec_col)
+    return _srp_keys(vecs, dim, n_planes), vecs
 
 
 def embedding_dedup_incremental(
@@ -709,13 +696,13 @@ def embedding_dedup_incremental(
     n_planes: int = 8,
     threshold: float = 0.9,
     probes: int = 1,
-    broadcast_batch: bool = False,
 ) -> dict:
     """Deduplicate a NEW batch of embeddings against a persisted SRP
     index — the embedding-mode mirror of
     :func:`minhash_dedup_incremental` (VERDICT r3 item 5). Candidates
     are (a) batch vectors whose multi-probe bucket set hits an INDEXED
-    vector's bucket and (b) batch-internal pairs; exact cosine verifies
+    vector's bucket (the batch probe rows are broadcast into the index
+    scan) and (b) batch-internal pairs; exact cosine verifies
     candidates, and a batch vector is dropped when any verified match
     has a smaller id (single_hop).
 
@@ -732,103 +719,27 @@ def embedding_dedup_incremental(
     Returns ``{"deduped", "new_buckets", "new_vectors"}`` — append the
     latter two to the index tables (ALL batch rows, survivors and
     dropped, for the same reason the MinHash path indexes both).
-    ``broadcast_batch=True`` hints the batch probe frame broadcast-able
-    (batch << corpus index), turning the index probe into a map-side
-    join over the index scan.
     """
-    from .similarity import srp_bucket, srp_probe_buckets
-
-    batch = spread_input(new_batch).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
+    index = _index(index_buckets, index_vectors)
     # feeds bucketing, the pair verify, and the returned new_vectors
-    batch = managed_persist(batch, "embedding_dedup_incremental.batch")
-    batch_buckets = batch.select(
-        "id", srp_bucket(F.col("v"), dim, n_planes).alias("bucket")
+    batch = managed_persist(
+        _vectors(new_batch, id_col, vec_col), "embedding_dedup_incremental.batch"
     )
-    if index_buckets is None or index_vectors is None:
-        if index_buckets is not None or index_vectors is not None:
-            raise ValueError("pass both index frames or neither")
-        index_buckets = batch_buckets.filter(F.lit(False))
-        index_vectors = batch.filter(F.lit(False))
-
-    probed = batch_buckets.select(
-        F.col("id").alias("id_b"),
-        F.explode(
-            srp_probe_buckets(F.col("bucket"), n_planes, probes)
-        ).alias("__pb"),
-    )
-    probe = F.broadcast(probed) if broadcast_batch else probed
-    cross = (
-        index_buckets.select(
-            F.col("id").alias("id_a"), F.col("bucket").alias("__ib")
-        )
-        .join(
-            probe,
-            (F.col("__ib") == F.col("__pb")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-    )
-    internal = (
-        batch_buckets.select(
-            F.col("id").alias("id_a"),
-            F.explode(
-                srp_probe_buckets(F.col("bucket"), n_planes, probes)
-            ).alias("__pb"),
-        )
-        .join(
-            batch_buckets.select(
-                F.col("id").alias("id_b"), F.col("bucket").alias("__ib")
-            ),
-            (F.col("__pb") == F.col("__ib")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-    )
-    cand = cross.unionByName(internal).dropDuplicates(["id_a", "id_b"])
-
-    # norms attach per ROW before the pair join (one array pass each),
-    # so the verify scores each candidate with a single dot-product
-    # pass — cosine()'s single-expression form would re-derive both
-    # norms (twice each) per PAIR
-    from .similarity import _cosine_pre, _norm
-
-    all_vecs = index_vectors.select("id", "v").unionByName(
-        batch.select("id", "v")
-    ).withColumn("__n", _norm(F.col("v")))
-    withvecs = cand.join(
-        all_vecs.select(
-            F.col("id").alias("id_a"),
-            F.col("v").alias("v_a"),
-            F.col("__n").alias("n_a"),
-        ),
-        "id_a",
-    ).join(
-        batch.select("id", "v")
-        .withColumn("__n", _norm(F.col("v")))
-        .select(
-            F.col("id").alias("id_b"),
-            F.col("v").alias("v_b"),
-            F.col("__n").alias("n_b"),
-        ),
-        "id_b",
-    )
-    losers = (
-        withvecs.select(
-            "id_b",
-            _cosine_pre(
-                F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .dropDuplicates()
+    batch_buckets = _srp_keys(batch, dim, n_planes)
+    deduped = _dedup_batch(
+        new_batch, id_col, (batch_buckets, batch), index, _SRP_KEYS,
+        _cosine_verify(threshold), probe=_srp_probe(n_planes, probes),
     )
     return {
-        "deduped": new_batch.join(losers, id_col, "left_anti"),
+        "deduped": deduped,
         "new_buckets": batch_buckets,
         "new_vectors": batch,
     }
+
+
+# --------------------------------------------------------------------
+# SimHash
+# --------------------------------------------------------------------
 
 
 def simhash_frame(
@@ -840,26 +751,21 @@ def simhash_frame(
     return sh.select("id", TH.simhash_spark(F.col("hashes"), bits).alias("simhash"))
 
 
-def _simhash_chunk_frame(sf: DataFrame, bands: int, w: int) -> DataFrame:
-    """(id, band, chunk) rows from an (id, simhash) frame — the
+def _simhash_chunk_frame(sf: DataFrame, bands: int, w: int, *keep) -> DataFrame:
+    """(id, *keep, band, chunk) rows from an (id, simhash) frame — the
     persisted SimHash index layout (fingerprints live in their own
     table, mirroring the MinHash band/shingle split)."""
-    return sf.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright("simhash", bi * w)
-                        .bitwiseAND(F.lit((1 << w) - 1))
-                        .alias("chunk"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.chunk")
+    mask = F.lit((1 << w) - 1)
+    return _band_rows(
+        sf,
+        "chunk",
+        [F.shiftright("simhash", bi * w).bitwiseAND(mask) for bi in range(bands)],
+        *keep,
+    )
+
+
+def _hamming(a: str, b: str) -> Column:
+    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
 
 
 def build_simhash_index(
@@ -878,10 +784,9 @@ def build_simhash_index(
     :func:`build_minhash_index`. Nightly batches probe them via
     :func:`simhash_dedup_incremental` instead of re-fingerprinting the
     whole corpus."""
-    if bits % bands != 0:
-        raise ValueError("bands must divide bits")
+    w = _band_width(bits, bands, "bits")
     sf = simhash_frame(df, id_col, text_col, k=k, bits=bits, hash_fn=hash_fn)
-    return _simhash_chunk_frame(sf, bands, bits // bands), sf
+    return _simhash_chunk_frame(sf, bands, w), sf
 
 
 def simhash_dedup_incremental(
@@ -895,13 +800,13 @@ def simhash_dedup_incremental(
     bits: int = 64,
     bands: int = 8,
     max_hamming: int = 3,
-    broadcast_batch: bool = False,
     hash_fn: str = "poly",
 ) -> dict:
     """Deduplicate a NEW batch against a persisted SimHash index — the
     SimHash mirror of :func:`minhash_dedup_incremental`. Candidates
-    are (a) batch docs sharing any band chunk with an INDEXED doc and
-    (b) batch-internal pairs; exact hamming (bit_count of xor over the
+    are (a) batch docs sharing any band chunk with an INDEXED doc (the
+    batch chunk rows are broadcast into the index scan) and (b)
+    batch-internal pairs; exact hamming (bit_count of xor over the
     full fingerprints) verifies candidates, and a batch doc is dropped
     when any verified match has a smaller id (single_hop).
 
@@ -914,85 +819,26 @@ def simhash_dedup_incremental(
 
     Returns ``{"deduped", "new_chunks", "new_fingerprints"}`` — append
     both to the index tables (ALL batch docs, survivors and dropped)."""
-    if bits % bands != 0:
-        raise ValueError("bands must divide bits")
-    w = bits // bands
-    batch_sf = simhash_frame(
-        new_batch, id_col, text_col, k=k, bits=bits, hash_fn=hash_fn
-    )
+    w = _band_width(bits, bands, "bits")
+    index = _index(index_chunks, index_fingerprints)
     # feeds chunking, the hamming verify, and the returned
     # new_fingerprints
     batch_sf = managed_persist(
-        batch_sf, "simhash_dedup_incremental.fingerprints"
+        simhash_frame(new_batch, id_col, text_col, k=k, bits=bits, hash_fn=hash_fn),
+        "simhash_dedup_incremental.fingerprints",
     )
     batch_chunks = _simhash_chunk_frame(batch_sf, bands, w)
-    if index_chunks is None or index_fingerprints is None:
-        if index_chunks is not None or index_fingerprints is not None:
-            raise ValueError("pass both index frames or neither")
-        index_chunks = batch_chunks.filter(F.lit(False))
-        index_fingerprints = batch_sf.filter(F.lit(False))
-
-    probe_src = batch_chunks.select(
-        F.col("id").alias("id_b"),
-        F.col("band").alias("band_b"),
-        F.col("chunk").alias("chunk_b"),
+    verify = (
+        {"s": F.col("simhash")},
+        _hamming("s_a", "s_b").alias("h"),
+        F.col("h") <= max_hamming,
     )
-    probe = F.broadcast(probe_src) if broadcast_batch else probe_src
-    cross = (
-        index_chunks.select(
-            F.col("id").alias("id_a"),
-            F.col("band").alias("band_a"),
-            F.col("chunk").alias("chunk_a"),
-        )
-        .join(
-            probe,
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("chunk_a") == F.col("chunk_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-    )
-    internal = (
-        batch_chunks.select(
-            F.col("id").alias("id_a"),
-            F.col("band").alias("band_a"),
-            F.col("chunk").alias("chunk_a"),
-        )
-        .join(
-            batch_chunks.select(
-                F.col("id").alias("id_b"),
-                F.col("band").alias("band_b"),
-                F.col("chunk").alias("chunk_b"),
-            ),
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("chunk_a") == F.col("chunk_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-    )
-    cand = cross.unionByName(internal).dropDuplicates(["id_a", "id_b"])
-
-    all_sf = index_fingerprints.select("id", "simhash").unionByName(
-        batch_sf.select("id", "simhash")
-    )
-    withfp = cand.join(
-        all_sf.select(F.col("id").alias("id_a"), F.col("simhash").alias("s_a")),
-        "id_a",
-    ).join(
-        batch_sf.select(F.col("id").alias("id_b"), F.col("simhash").alias("s_b")),
-        "id_b",
-    )
-    losers = (
-        withfp.select(
-            "id_b",
-            F.bit_count(F.col("s_a").bitwiseXOR(F.col("s_b"))).alias("h"),
-        )
-        .filter(F.col("h") <= max_hamming)
-        .select(F.col("id_b").alias(id_col))
-        .dropDuplicates()
+    deduped = _dedup_batch(
+        new_batch, id_col, (batch_chunks, batch_sf), index, _SIMHASH_KEYS,
+        verify,
     )
     return {
-        "deduped": new_batch.join(losers, id_col, "left_anti"),
+        "deduped": deduped,
         "new_chunks": batch_chunks,
         "new_fingerprints": batch_sf,
     }
@@ -1021,56 +867,17 @@ def simhash_pairs(
     with it set, pairs whose ONLY shared chunk is over-popular are
     missed, which also voids the pigeonhole exactness guarantee:
     capped runs are approximate by design."""
-    if bits % bands != 0:
-        raise ValueError("bands must divide bits")
-    w = bits // bands
+    w = _band_width(bits, bands, "bits")
     sf = simhash_frame(df, id_col, text_col, k=k, bits=bits, hash_fn=hash_fn)
-    # NOTE: both self-join sides consume the fingerprint frame; a
-    # per-call persist was measured and WITHDRAWN (frozen-oracle
-    # 6dp-boundary interference, OPTIMIZATION_r07.md); persist the
-    # fingerprint table upstream at corpus scale.
-    banded = sf.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright("simhash", bi * w)
-                        .bitwiseAND(F.lit((1 << w) - 1))
-                        .alias("chunk"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "simhash", "bb.band", "bb.chunk")
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band", "chunk")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > int(max_bucket_size))
-            .select("band", "chunk")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "chunk"], "left_anti")
-    left = banded.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("s_a"),
-        F.col("band").alias("band_a"), F.col("chunk").alias("chunk_a"),
+    # The 8-byte fingerprint rides the band join instead of re-attaching
+    # (two id joins cost more than it weighs). NOTE: both self-join
+    # sides consume the fingerprint frame; a per-call persist was
+    # measured and WITHDRAWN (frozen-oracle 6dp-boundary interference,
+    # OPTIMIZATION_r07.md); persist the fingerprint table upstream at
+    # corpus scale.
+    cand = _candidates(
+        _simhash_chunk_frame(sf, bands, w, "simhash"), _SIMHASH_KEYS,
+        cap=max_bucket_size,
+        carry=({"s": F.col("simhash")}, _hamming("s_a", "s_b").alias("hamming")),
     )
-    right = banded.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("s_b"),
-        F.col("band").alias("band_b"), F.col("chunk").alias("chunk_b"),
-    )
-    hamming = F.bit_count(F.col("s_a").bitwiseXOR(F.col("s_b")))
-    return (
-        left.join(
-            right,
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("chunk_a") == F.col("chunk_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b", hamming.alias("hamming"))
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return cand.filter(F.col("hamming") <= max_hamming)

@@ -413,7 +413,6 @@ def dedup_ingest_epoch(
         n_hashes=n_hashes,
         bands=bands,
         verify_threshold=verify_threshold,
-        broadcast_batch=True,
     )
     _epoch_write(r["deduped"], out_dir)
     _epoch_write(r["new_bands"], bands_path)

@@ -150,7 +150,7 @@ def pipeline_probe(spark) -> dict:
                 docs.filter(did >= split), "doc_id", "text",
                 index_bands=idx_b, index_shingles=idx_s,
                 k=5, n_hashes=12, bands=4, verify_threshold=0.4,
-                hash_fn="xxhash64", broadcast_batch=True,
+                hash_fn="xxhash64",
             )
             return r["deduped"].count()
         return run
